@@ -29,7 +29,6 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // 2250, not 2400: the budget clock starts INSIDE the JVM, after
     // ~30-60 s of sbt/JVM startup the driver's external timeout does
     // count — r5 shed load to a 2358 s sbt total against what looks like
@@ -171,7 +170,7 @@ object Bench {
       reaper.start()
     }
 
-    val spark = GraftSession.local("graft-bench", cpus)
+    val spark = GraftSession.local("graft-bench", GraftSession.cpus)
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () } // session init
     // Default warm-up scale: the sf0.01 sibling of the bench directory —
     // close enough in stats that AQE picks the same physical plans (so the
@@ -193,7 +192,7 @@ object Bench {
       // is spent (a degraded host should spend what's left on the timed
       // pass, which is the deliverable).
       names.iterator.takeWhile(_ => elapsed < budgetSec * 0.4).foreach { name =>
-        Watchdog.runCapped(spark, s"warm-$name", capSec) {
+        Watchdog.runCapped(spark, name, capSec) {
           SparkEntry.queries(name)(spark, warmDir).count()
         }
         spark.catalog.clearCache()

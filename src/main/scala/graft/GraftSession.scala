@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on, with partition coalescing and skew-join splitting, so the
   *    shuffle partition count self-corrects at runtime instead of being
   *    hand-tuned per scale factor.
-  *  - `shuffle.partitions` defaults to 32 locally (driver runs local[32]);
+  *  - `shuffle.partitions` defaults to the local thread count ([[cpus]]);
   *    on a cluster this is overridden to ~2-3x total cores and AQE
   *    coalesces the excess.
   *  - Broadcast threshold raised to 64 MB: genuinely small sides (the
@@ -22,13 +22,19 @@ import org.apache.spark.sql.SparkSession
   *    growing table is an OOM at 100 TB, not a plan choice).
   */
 object GraftSession {
+
+  /** Local task threads (and the default shuffle width):
+    * `$SPARK_GRAFT_CPUS`, else the host's processor count. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   def builder(appName: String = "graft", master: Option[String] = None): SparkSession.Builder = {
     val b = SparkSession.builder()
       .appName(appName)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       // ObjectHashAggregate (collect_set/collect_list — every dedup
       // bucket stage) falls back to SORT-BASED aggregation after this

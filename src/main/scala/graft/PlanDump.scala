@@ -21,8 +21,7 @@ object PlanDump {
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local("plan-dump", cpus)
+    val spark = GraftSession.local("plan-dump", GraftSession.cpus)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val formatted = df.queryExecution.explainString(

@@ -21,8 +21,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StageProfile <queryName> [more names]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local("graft-stage-profile", cpus)
+    val spark = GraftSession.local("graft-stage-profile", GraftSession.cpus)
 
     final case class Acc(var taskMs: Long = 0L, var cpuNs: Long = 0L,
                          var tasks: Int = 0, var inBytes: Long = 0L,

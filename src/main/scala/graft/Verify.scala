@@ -16,7 +16,6 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // Optional extra args = restrict to these query names (local iteration).
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -57,7 +56,7 @@ object Verify {
       if (holderAlive)
         System.err.println("[verify] sweep lock STILL held — proceeding contended")
     }
-    val spark = GraftSession.local("graft-verify", cpus)
+    val spark = GraftSession.local("graft-verify", GraftSession.cpus)
     val cap = Watchdog.queryCapSec
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))

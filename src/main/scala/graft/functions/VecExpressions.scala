@@ -179,6 +179,20 @@ case class L2SqF64(left: Expression, right: Expression)
     }.getOrElse(TypeCheckResult.TypeCheckSuccess)
   }
 
+  // A null element makes the distance null, as in the HOF twin's fold
+  // (acc + null·null is null) and UnitF32. The element check is
+  // emitted only for an argument whose type admits null elements, so a
+  // containsNull=false input keeps the bare loop.
+  private def elemNulls(e: Expression): Boolean = e.dataType match {
+    case org.apache.spark.sql.types.ArrayType(_, containsNull) => containsNull
+    case _ => true
+  }
+  @transient private lazy val checkLeft = elemNulls(left)
+  @transient private lazy val checkRight = elemNulls(right)
+
+  override def nullable: Boolean =
+    left.nullable || right.nullable || checkLeft || checkRight
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -186,6 +200,7 @@ case class L2SqF64(left: Expression, right: Expression)
     var acc = 0.0
     var i = 0
     while (i < n) {
+      if ((checkLeft && x.isNullAt(i)) || (checkRight && y.isNullAt(i))) return null
       val di = x.getDouble(i) - y.getDouble(i)
       acc += di * di
       i += 1
@@ -199,10 +214,16 @@ case class L2SqF64(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val acc = ctx.freshName("acc")
       val di = ctx.freshName("di")
+      val nullElem = Seq(checkLeft -> xa, checkRight -> ya)
+        .collect { case (true, arr) => s"$arr.isNullAt($i)" }
+      val guard =
+        if (nullElem.isEmpty) ""
+        else s"if (${nullElem.mkString(" || ")}) { ${ev.isNull} = true; break; }"
       s"""
          |int $n = java.lang.Math.min($xa.numElements(), $ya.numElements());
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  $guard
          |  double $di = $xa.getDouble($i) - $ya.getDouble($i);
          |  $acc += $di * $di;
          |}

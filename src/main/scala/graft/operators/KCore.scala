@@ -28,11 +28,15 @@ object KCore {
     * `maxIter` rounds: the survivors would then be a SUPERSET of the
     * k-core (sub-k nodes still present), and a silently-wrong core is
     * worse than a loud failure. Callers on pathological graphs raise
-    * maxIter (peel depth = degeneracy depth, ~5-20 even on web graphs). */
-  /** `deg0` optionally supplies the whole-graph degree table `(u, dg)`
+    * maxIter (peel depth = degeneracy depth, ~5-20 even on web graphs).
+    *
+    * `deg0` optionally supplies the whole-graph degree table `(u, dg)`
     * (e.g. the staged codeg rollup the co-purchase family shares) so the
     * peel skips its own 2|E|-row aggregate; when absent it is computed
-    * here. */
+    * here. It MUST hold exactly the degree multiset of `edges`: one row
+    * per endpoint node with its number of incident pairs. The peel trusts
+    * it — a table over a different edge set yields a wrong core, not an
+    * error (PropertySpec pins equality with the `deg0 = None` result). */
   def kcore(edges: DataFrame, k: Int, maxIter: Int = 30,
             reliable: Boolean = false,
             deg0: Option[DataFrame] = None): DataFrame = {

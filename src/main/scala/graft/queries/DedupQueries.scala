@@ -17,27 +17,6 @@ object DedupQueries {
   private val toks = TextFunctions.tokensDuck("text")
   private val P = Dedup.P
 
-  /** The D2/D2c shared candidate table (a, b, inter, na, nb), staged to
-    * tmp parquet ONCE per (input dir, n) per JVM — the same immutable-
-    * input staging idiom as StreamingQueries.stagedEvents. Jaccard and
-    * containment differ only in their closing arithmetic; before this,
-    * each query planned its own full candidate pass (shingle → bucket →
-    * pair explosion → inter count), so the harness paid the expensive
-    * stage twice per session (r6 verdict item 3: d_containment at 2.2×
-    * its oracle purely from the duplicated build). Parquet, not
-    * `persist()`: the harness clears the Spark cache between queries,
-    * and a tmp file survives that. On a cluster this is exactly the
-    * write-once-reuse shape the candidate table would take anyway
-    * (materialized between pipeline stages, shared by every closing
-    * metric). */
-  private[queries] def stagedOverlap(s: org.apache.spark.sql.SparkSession, d: String,
-                                     n: Int): org.apache.spark.sql.DataFrame =
-    // Routed through StagedTables.staged so the build cost lands in the
-    // shared buildLog (bench staging disclosure) and check-then-stage
-    // serializes on the one staging lock.
-    StagedTables.staged(s, s"overlap_n$n", d)(
-      Dedup.setOverlapPairs(StagedTables.docsSpread(s, d), "doc_id", "text", n))
-
   /** Shared oracle CTE prefix: tokenize → word n-grams → distinct
     * (doc, shingle) → md5-hashed 60-bit gid (Dedup.hashedIds twin — no
     * vocabulary build in either engine). `from` is any relation with
@@ -110,7 +89,7 @@ object DedupQueries {
          |FROM inter JOIN sizes sa ON a = sa.doc JOIN sizes sb ON b = sb.doc
          |WHERE CAST(ic AS DOUBLE) / CAST(sa.n + sb.n - ic AS DOUBLE) >= 0.3
          |ORDER BY a, b""".stripMargin) { (s, d) =>
-      Dedup.jaccardFromOverlap(stagedOverlap(s, d, 3), 0.3)
+      Dedup.jaccardFromOverlap(StagedTables.overlapN3(s, d), 0.3)
         .orderBy("a", "b")
     },
 
@@ -133,7 +112,7 @@ object DedupQueries {
          |FROM inter JOIN sizes sa ON a = sa.doc JOIN sizes sb ON b = sb.doc
          |WHERE greatest(CAST(ic AS DOUBLE) / sa.n, CAST(ic AS DOUBLE) / sb.n) >= 0.6
          |ORDER BY a, b""".stripMargin) { (s, d) =>
-      Dedup.containmentFromOverlap(stagedOverlap(s, d, 3), 0.6)
+      Dedup.containmentFromOverlap(StagedTables.overlapN3(s, d), 0.6)
         .orderBy("a", "b")
     },
 
@@ -158,7 +137,7 @@ object DedupQueries {
          |  CAST(sum(n_pairs) OVER (ORDER BY band DESC) AS BIGINT) AS n_pairs_ge
          |FROM g ORDER BY threshold""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      val j = stagedOverlap(s, d, 3)
+      val j = StagedTables.overlapN3(s, d)
         .select(least(floor(lit(10.0) * col("inter") /
             (col("na") + col("nb") - col("inter"))).cast("long"), lit(9)).as("band"))
       j.groupBy("band").agg(count(lit(1)).as("n_pairs"))

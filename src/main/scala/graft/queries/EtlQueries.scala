@@ -11,30 +11,15 @@ import graft.sources.Tables
 object EtlQueries {
 
   /** Stage orders + customer as catalog-managed tables bucketed by
-    * custkey (16 buckets, bucket-sorted) — once per (input dir) per JVM,
-    * the same immutable-input staging idiom as the streaming/overlap
-    * stages. The bucket build IS the one-time shuffle the G9 story
-    * amortizes; every subsequent join on custkey reads co-located
-    * buckets. Table names are dir-keyed so sf0.001/sf0.01/sf0.1 runs
-    * never collide in the shared warehouse. */
+    * custkey (16 buckets, bucket-sorted) — once per input, through the
+    * StagedTables bucketed form (content-keyed names, so sf0.001/sf0.01/
+    * sf0.1 runs never collide in the shared warehouse). The bucket build
+    * IS the one-time shuffle the G9 story amortizes; every subsequent
+    * join on custkey reads co-located buckets. */
   private[graft] def bucketedOrdersCustomer(
-      s: org.apache.spark.sql.SparkSession, d: String): (String, String) = {
-    val key = Integer.toHexString(d.hashCode)
-    val (ot, ct) = (s"g9_orders_$key", s"g9_customer_$key")
-    def build(table: String, df: => org.apache.spark.sql.DataFrame, k: String): Unit =
-      if (!s.catalog.tableExists(table)) {
-        // a previous JVM may have left the warehouse dir behind while the
-        // in-memory catalog forgot the table — the bucketing spec lives in
-        // the catalog, so the orphan dir is useless; rebuild from scratch
-        val wh = new java.io.File(
-          new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath, table)
-        if (wh.exists()) org.apache.commons.io.FileUtils.deleteQuietly(wh)
-        Tables.writeBucketed(df, table, Seq(k), 16, sortCols = Seq(k))
-      }
-    build(ot, Tables.orders(s, d), "o_custkey")
-    build(ct, Tables.customer(s, d), "c_custkey")
-    (ot, ct)
-  }
+      s: org.apache.spark.sql.SparkSession, d: String): (String, String) =
+    (StagedTables.bucketed(s, "g9_orders", d, "o_custkey", 16, sorted = true)(Tables.orders(s, d)),
+      StagedTables.bucketed(s, "g9_customer", d, "c_custkey", 16, sorted = true)(Tables.customer(s, d)))
 
   /** The co-located join itself (shared with PlanSpec's zero-Exchange
     * assertion): merge-hinted so the plan is the sort-merge join the

@@ -20,13 +20,6 @@ object GraphQueries {
   private val damp = 0.85
   private val iters = 10
 
-  // The shared co-purchase edge table (u, v, w) — see StagedTables.coEdges:
-  // built once per JVM, read by B51/B71 (w ≥ 1), B64 (w ≥ 2), and
-  // AnalyticsQueries' q_basket_rules (w ≥ min-support).
-  private def stagedCoEdges(s: org.apache.spark.sql.SparkSession,
-                            d: String): org.apache.spark.sql.DataFrame =
-    StagedTables.coEdges(s, d)
-
   val all: Seq[QueryDef] = Seq(
 
     // B34 — PageRank over the event-type transition graph: nodes are
@@ -122,7 +115,7 @@ object GraphQueries {
       // the shared staged edge table IS the pair set (w ≥ 1 = every
       // distinct co-purchase pair); the data-scale self-join runs once
       // per JVM across B51/B64/B71
-      val pairs = stagedCoEdges(s, d).select("u", "v")
+      val pairs = StagedTables.coEdges(s, d).select("u", "v")
       // r16: degrees from the staged codeg rollup (shared with B71/B104/
       // B106) — each consumer previously re-ran the 2|E|-row aggregate.
       val deg = StagedTables.coDeg(s, d)
@@ -233,7 +226,7 @@ object GraphQueries {
       // degrade to shuffled joins when it doesn't (the r7-verdict/ADVICE
       // guard — a forced broadcast of a growing edge set is an OOM at
       // 100×, not a plan choice).
-      val e = stagedCoEdges(s, d).filter(col("w") >= 2).select("u", "v")
+      val e = StagedTables.coEdges(s, d).filter(col("w") >= 2).select("u", "v")
       val adj = e.select(col("u").as("a"), col("v").as("b"))
         .unionAll(e.select(col("v").as("a"), col("u").as("b")))
       val deg = adj.groupBy(col("a").as("node")).agg(count(lit(1)).as("dg"))
@@ -272,7 +265,7 @@ object GraphQueries {
         |        GROUP BY 1)
         |SELECT dg AS degree, count(*) AS n_nodes
         |FROM deg GROUP BY 1 ORDER BY degree""".stripMargin) { (s, d) =>
-      // shared staged edge table (see stagedCoEdges): B71 re-reads the
+      // shared staged edge table (see StagedTables.coEdges): B71 re-reads the
       // same parquet B51/B64 stage instead of re-running the pair dedup —
       // the r7 verdict's 4.2×-over-oracle gap was exactly that re-run
       // r16: degrees come from the staged codeg rollup (shared with
@@ -298,7 +291,7 @@ object GraphQueries {
       // whole-graph degrees from the staged codeg rollup (shared with
       // B71/B104/B106) — the peel then starts from node-dim state and
       // touches the edge table only on rounds that remove nodes (r17)
-      graft.operators.KCore.kcore(stagedCoEdges(s, d).select("u", "v"), k = 4,
+      graft.operators.KCore.kcore(StagedTables.coEdges(s, d).select("u", "v"), k = 4,
           deg0 = Some(StagedTables.coDeg(s, d)
             .select(col("node").as("u"), col("dg"))))
         .orderBy("node")
@@ -338,7 +331,7 @@ object GraphQueries {
         |  CAST(tri AS DOUBLE) / (dg * (dg - 1) / 2) AS lcc
         |FROM pt JOIN deg USING (node) WHERE dg >= 2
         |ORDER BY lcc DESC, node LIMIT 20""".stripMargin) { (s, d) =>
-      val pairs = stagedCoEdges(s, d).select("u", "v")
+      val pairs = StagedTables.coEdges(s, d).select("u", "v")
       // r16: degrees from the staged codeg rollup — the node-dim parquet
       // carries real size stats, so the two deg joins below broadcast
       // while the node dim fits (the g_assortativity SMJ lesson).
@@ -418,7 +411,7 @@ object GraphQueries {
         |  (sqrt(CAST(n AS DOUBLE)*sxx - CAST(sx AS DOUBLE)*sx) *
         |   sqrt(CAST(n AS DOUBLE)*syy - CAST(sy AS DOUBLE)*sy)) AS assortativity
         |FROM m""".stripMargin) { (s, d) =>
-      val pairs = stagedCoEdges(s, d).select("u", "v")
+      val pairs = StagedTables.coEdges(s, d).select("u", "v")
       // node-dim degrees: the staged codeg rollup (shared with B71 —
       // each consumer previously paid the 2|E|-row aggregate itself)
       val deg = StagedTables.coDeg(s, d)
@@ -480,7 +473,7 @@ object GraphQueries {
         |  WHERE bfs.dist < 8)
         |SELECT node, min(dist) AS dist FROM bfs
         |GROUP BY node ORDER BY dist, node""".stripMargin) { (s, d) =>
-      val e = stagedCoEdges(s, d).filter(col("w") >= 2).select("u", "v")
+      val e = StagedTables.coEdges(s, d).filter(col("w") >= 2).select("u", "v")
       val adj = e.select(col("u").as("a"), col("v").as("b"))
         .unionAll(e.select(col("v").as("a"), col("u").as("b")))
         .localCheckpoint(true)
@@ -529,7 +522,7 @@ object GraphQueries {
         |  CAST(max(sz) AS BIGINT) AS gcc_size,
         |  CAST(max(sz) AS DOUBLE) / sum(sz) AS gcc_share
         |FROM cs""".stripMargin) { (s, d) =>
-      val e = stagedCoEdges(s, d).filter(col("w") >= 2).select("u", "v")
+      val e = StagedTables.coEdges(s, d).filter(col("w") >= 2).select("u", "v")
       val lab = graft.operators.Dedup.components(e, "u", "v")
       val cs = lab.groupBy("component").agg(count(lit(1)).cast("long").as("sz"))
       cs.agg(count(lit(1)).cast("long").as("n_components"),

@@ -407,10 +407,9 @@ object SimilarityQueries {
     }) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
-      // staged once per dataset (rrfTokens: the 24M-row token fan-out
-      // otherwise re-runs per query — and single-threaded on the scan's
-      // ONE task without the repartition inside the stage)
-      val tk = rrfTokens(s, d)
+      // staged once per dataset (the doc_tok_cnt incidence: the 24M-row
+      // token fan-out otherwise re-runs per query)
+      val tk = StagedTables.docTok(s, d)
       val pr = docs.filter(col("doc_id") % 25 === 0).select(col("doc_id").as("q"))
       // BROADCAST the probe-token side: the token key has ~vocabulary
       // cardinality, so an equi-join shuffled on it is maximally skewed
@@ -432,8 +431,8 @@ object SimilarityQueries {
       // integer arithmetic instead of a banned double→DECIMAL re-entry).
       // Headroom: idf_fp ≤ ln(nd)·2^40 ≈ 4e13; 2^53 clears ~200 shared
       // tokens per pair — and the sum is rank-only, never exits to
-      // DOUBLE. The table itself is staged per dataset (rrfIdf).
-      val dfIdf = broadcast(rrfIdf(s, d))
+      // DOUBLE. The table itself is staged per dataset (StagedTables.rrfIdf).
+      val dfIdf = broadcast(StagedTables.rrfIdf(s, d))
       // r17 (§2.3/§2.4): repartition the doc-token side by d BEFORE the
       // fan. The staged incidence is laid out by (doc, tok) hash, so each
       // (q, d) group's rows were scattered across map partitions and the
@@ -503,8 +502,8 @@ object SimilarityQueries {
       // the query itself is only the candidate join + rescore + fusion
       // (r14 verdict item 6: rebuilding these per run made the capped
       // path slower than exact at sf0.1, inverting its purpose).
-      val tkAll = rrfTokens(s, d)
-      val postings = rrfPostings(s, d)
+      val tkAll = StagedTables.docTok(s, d)
+      val postings = StagedTables.rrfPostings(s, d)
       // Bounded probe set: modulus 25 up to rrfProbeBudget probes (every
       // scale through sf10 unchanged), then grows with the corpus so the
       // ptk broadcast below stays probes × tokens-per-doc — a constant
@@ -526,7 +525,7 @@ object SimilarityQueries {
         .join(ptk.select("tok", "q"), Seq("tok"))
         .filter(col("d") =!= col("q"))
         .select("q", "d").distinct()
-      val dfIdf = broadcast(rrfIdf(s, d))
+      val dfIdf = broadcast(StagedTables.rrfIdf(s, d))
       val kw = cands
         .join(tkAll.select(col("doc_id").as("d"), col("tok")), Seq("d"))
         .join(ptk, Seq("q", "tok"))
@@ -553,10 +552,6 @@ object SimilarityQueries {
     }
   )
 
-  /** Truncated-posting cap for the E12 production path: per token only
-    * the cap highest-tf docs enter the keyword candidate join. */
-  private val rrfPostCap = 64
-
   /** Probe budget for the capped path: the probe modulus grows with the
     * corpus once `doc_id % 25` would exceed ~20k probes, so the
     * probe-token broadcast is bounded by probes × tokens-per-doc at ANY
@@ -567,56 +562,14 @@ object SimilarityQueries {
     * (500k docs) the modulus stays 25, so rows are unchanged there. */
   private val rrfProbeBudget = 20000L
 
-  /** Staged (doc_id, tok) distinct-token fan-out shared by both E12
-    * paths — built once per (dataset, JVM) and re-read as parquet (the
-    * StagedTables discipline; r14 verdict item 6: the capped path was
-    * paying the full tokenize + postings + idf build on every run, which
-    * at sf0.1 made it SLOWER than the exact path it exists to beat). The
-    * repartition spreads the single-split corpus before the fan-out. */
-  private[queries] def rrfTokens(s: org.apache.spark.sql.SparkSession, d: String) =
-    // r16: the distinct (doc_id, tok) incidence IS the staged doc_tok_cnt
-    // grain — the rrf chain's own tokenize pass (and its separate
-    // rrf_tokens staging) collapsed into the corpus-wide tokenize-once
-    // artifact. Row-identical: explode(array_distinct(tokens)) per doc
-    // == the distinct (doc_id, tok) projection.
-    StagedTables.docTok(s, d)
-
-  /** Staged vocabulary-sized fixed-point idf table (tok, idf_fp): the
-    * portable ln runs once per vocabulary entry per dataset, not once
-    * per query run. Quantization contract documented at the consumer. */
-  private[queries] def rrfIdf(s: org.apache.spark.sql.SparkSession, d: String) =
-    StagedTables.staged(s, "rrf_idf", d) {
-      val tk = rrfTokens(s, d)
-      val nn = Tables.documents(s, d).agg(count(lit(1)).as("nd"))
-      tk.groupBy("tok").agg(count(lit(1)).as("df"))
-        .crossJoin(nn).select(col("tok"),
-          round(graft.functions.PortableMath.pLn(col("nd").cast("double") / col("df"))
-            * lit(1099511627776.0)).cast("long").as("idf_fp"))
-    }
-
-  /** Staged capped posting lists (tok, d): per token the rrfPostCap
-    * statically-best docs by distinct-token count — O(vocab × cap) rows
-    * regardless of corpus size. The truncation is a bounded heap per
-    * token (B10n compiles the rank filter), built once per dataset. */
-  private[queries] def rrfPostings(s: org.apache.spark.sql.SparkSession, d: String) =
-    StagedTables.staged(s, "rrf_postings", d) {
-      import org.apache.spark.sql.expressions.Window
-      val tk = rrfTokens(s, d)
-      val ntok = tk.groupBy("doc_id").agg(count(lit(1)).as("ntok"))
-      tk.join(ntok, "doc_id")
-        .withColumn("pr", row_number().over(
-          Window.partitionBy("tok").orderBy(col("ntok").desc, col("doc_id"))))
-        .filter(col("pr") <= rrfPostCap)
-        .select(col("tok"), col("doc_id").as("d"))
-    }
-
   private val pqCodebookCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Float]]]]
 
   /** Memoized per-dataset PQ codebooks (train once, serve many — the E3
-    * quantizer discipline; training is deterministic). */
+    * quantizer discipline; training is deterministic), keyed by the
+    * input's content key so a rewritten input retrains. */
   def pqCodebooksFor(emb: org.apache.spark.sql.DataFrame, d: String): Array[Array[Array[Float]]] =
-    pqCodebookCache.getOrElseUpdate(d,
+    pqCodebookCache.getOrElseUpdate(StagedTables.key(emb.sparkSession, "pq_codebooks", d),
       Similarity.trainPqCodebooks(emb, "embedding", dims = 64, m = 8, ksub = 16))
 
   /** E4's oracle CTE chain ending in `cm(true_label, pred_label, n)` —
@@ -680,8 +633,9 @@ object SimilarityQueries {
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Float]]]
 
   /** Shared memoized IVF quantizer for a dataset (also used by the
-    * d_embed_neardup_ivf blocking pre-pass — one index, many consumers). */
+    * d_embed_neardup_ivf blocking pre-pass — one index, many consumers),
+    * keyed like [[pqCodebooksFor]]. */
   def centroidsFor(emb: org.apache.spark.sql.DataFrame, d: String): Array[Array[Float]] =
-    ivfCentroidCache.getOrElseUpdate(d,
+    ivfCentroidCache.getOrElseUpdate(StagedTables.key(emb.sparkSession, "ivf_centroids", d),
       Similarity.trainIvfCentroids(emb, "embedding", nLists = 16))
 }

@@ -145,34 +145,21 @@ object StreamingQueries {
   private def statePartitionsFor(s: org.apache.spark.sql.SparkSession,
                                  stagedDir: String,
                                  bytesPerPartition: Long = 4L << 20): Int = {
-    val sz = try org.apache.commons.io.FileUtils.sizeOfDirectory(
-      new java.io.File(stagedDir)) catch { case _: Throwable => 0L }
+    val p = new org.apache.hadoop.fs.Path(stagedDir)
+    val sz = p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
     math.max(8L, math.min(s.sparkContext.defaultParallelism.toLong,
       sz / bytesPerPartition)).toInt
   }
 
   /** Stage the events table as a µs-precision parquet dir for file-source
     * streaming (parquet NANOS can't stream through a TimestampType
-    * schema). The staged copy of an immutable input dir is itself
-    * immutable — keyed by sfDir, staged once per JVM. `doubled = true`
+    * schema), once per input (a StagedTables directory). `doubled = true`
     * writes every event twice (two identical files) — the planted-
     * duplicate input for the streaming dedup query. */
-  // JVM-wide staging lock (ADVICE r7): two threads racing a stager before
-  // its done-marker exists would both stage — harmless for an idempotent
-  // parquet write, but stagedLateEvents pins FILE MODIFICATION TIMES to
-  // order the replay, and a second staging pass re-pins them with a new t0
-  // while the first thread may already be streaming — scrambling the
-  // batch order the late-arrival semantics depend on. One lock serializes
-  // every check-then-stage; staging happens once per JVM, so contention
-  // is a non-issue.
-  private val stagingLock = new Object
-
   private def stagedEvents(s: org.apache.spark.sql.SparkSession, d: String,
-                           doubled: Boolean = false, flush: Boolean = false): String = stagingLock.synchronized {
-    val key = Integer.toHexString(d.hashCode) +
-      (if (doubled) "x2" else "") + (if (flush) "fl" else "")
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_events_$key"
-    if (!new java.io.File(s"$dir/events/_SUCCESS").isFile) {
+                           doubled: Boolean = false, flush: Boolean = false): String =
+    StagedTables.dir(s, "stream_events" + (if (doubled) "_x2" else "") +
+        (if (flush) "_fl" else ""), d) { dir =>
       val ev = Tables.events(s, d)
       val base = if (doubled) ev.unionAll(ev) else ev
       // `flush` appends one sentinel event per user 2 h past end-of-stream
@@ -191,9 +178,27 @@ object StreamingQueries {
             lit(0.0).as("value"), lit(null).cast("string").as("props"))
         base.unionByName(sentinel)
       }
-      staged.write.mode("overwrite").parquet(s"$dir/events")
+      staged.write.parquet(dir)
     }
-    s"$dir/events"
+
+  /** Fill `dir` with one single-file parquet part per frame, named as
+    * given, with modification times pinned a minute apart in that order:
+    * the file source replays files oldest first, one per micro-batch when
+    * paced. */
+  private def replayFiles(s: org.apache.spark.sql.SparkSession, dir: String,
+                          parts: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val t0 = System.currentTimeMillis()
+    parts.zipWithIndex.foreach { case ((name, df), i) =>
+      val tmp = new Path(dir, s"_tmp_$i")
+      df.coalesce(1).write.parquet(tmp.toString)
+      val part = fs.listStatus(tmp).map(_.getPath).find(_.getName.endsWith(".parquet")).get
+      val dst = new Path(dir, name)
+      fs.rename(part, dst)
+      fs.setTimes(dst, t0 - 180000 + i * 60000, -1)
+      fs.delete(tmp, true)
+    }
   }
 
   /** Stage the late-arrival replay: THREE parquet files with ordered
@@ -209,13 +214,9 @@ object StreamingQueries {
     *    aggregation must DROP them — plus the closing 'flush' sentinel at
     *    max ts + 2 h whose event time pushes the final watermark over
     *    every real window end (f_stream_session's heartbeat trick).
-    * Immutable per sfDir, staged once per JVM. */
-  private def stagedLateEvents(s: org.apache.spark.sql.SparkSession, d: String): String = stagingLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_events_" +
-      Integer.toHexString(d.hashCode) + "late3"
-    val done = new java.io.File(s"$dir/_STAGED")
-    if (!done.isFile) {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
+    * Staged once per input. */
+  private def stagedLateEvents(s: org.apache.spark.sql.SparkSession, d: String): String =
+    StagedTables.dir(s, "stream_events_late3", d) { dir =>
       val ev = Tables.events(s, d)
       val bounds = ev.agg(min(col("ts")).as("mn"), max(col("ts")).as("mx")).head()
       val (mn, mx) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
@@ -230,28 +231,9 @@ object StreamingQueries {
           (col("id") + 1).as("user_id"), lit("click").as("event_type"),
           lit(100.0).as("value"), lit(null).cast("string").as("props"))
         .unionByName(flushRow(2))
-      def onePart(df: org.apache.spark.sql.DataFrame, tmp: String): java.nio.file.Path = {
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val st = Files.list(Paths.get(tmp))
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get finally st.close()
-      }
-      val parts = Seq(
-        "00_real.parquet" -> onePart(ev, s"$dir/_tmp_a"),
-        "01_heartbeat.parquet" -> onePart(flushRow(1), s"$dir/_tmp_b"),
-        "02_late.parquet" -> onePart(planted, s"$dir/_tmp_c"))
-      Files.createDirectories(Paths.get(dir))
-      // the file source orders by modification time — pin the replay order
-      val t0 = System.currentTimeMillis()
-      parts.zipWithIndex.foreach { case ((name, src), i) =>
-        Files.copy(src, Paths.get(s"$dir/$name"), StandardCopyOption.REPLACE_EXISTING)
-        new java.io.File(s"$dir/$name").setLastModified(t0 - 180000 + i * 60000)
-      }
-      Seq("_tmp_a", "_tmp_b", "_tmp_c").foreach(t =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$t")))
-      done.createNewFile()
+      replayFiles(s, dir, Seq("00_real.parquet" -> ev,
+        "01_heartbeat.parquet" -> flushRow(1), "02_late.parquet" -> planted))
     }
-    dir
-  }
 
   val all: Seq[QueryDef] = Seq(
 
@@ -266,8 +248,8 @@ object StreamingQueries {
         |  count(*) AS n_events,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
-      // the staged µs copy of an immutable input dir is itself immutable —
-      // key it by sfDir and stage once per JVM lifetime, not per run
+      // the staged µs copy is keyed by the input's content, so it is
+      // staged once per input, not per run
       val counts = Events.tumblingCounts(Events.readEventStream(s, stagedEvents(s, d)))
       val sink = "f_stream_tumbling_sink"
       withStatePartitions(s, 8) {
@@ -604,47 +586,22 @@ object StreamingQueries {
   /** Stage events as THREE ts-range tercile files with pinned ascending
     * modification times — a deterministic 3-batch CDC replay where every
     * batch's event times follow the previous batch's (global ts sort ⇒
-    * per-user monotone trivially). Immutable per sfDir, staged once per
-    * JVM (same lock discipline as the other stagers). */
+    * per-user monotone trivially). Staged once per input. */
   private def stagedEventTerciles(s: org.apache.spark.sql.SparkSession, d: String): String =
-    stagingLock.synchronized {
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_events_" +
-        Integer.toHexString(d.hashCode) + "ter3"
-      val done = new java.io.File(s"$dir/_STAGED")
-      if (!done.isFile) {
-        import java.nio.file.{Files, Paths, StandardCopyOption}
-        // single-partition sort, THEN the id: on one partition
-        // monotonically_increasing_id is 0..n-1 in sort order (after a
-        // distributed orderBy the ids would be partition-offset encoded —
-        // monotone but not contiguous, breaking the n/3 cuts)
-        val one = Tables.events(s, d).coalesce(1)
-          .sortWithinPartitions("ts", "event_id")
-          .withColumn("__rn", monotonically_increasing_id())
-          .persist()
-        val n = one.count()
-        def slice(lo: Long, hi: Long) = one.filter(col("__rn") >= lo && col("__rn") < hi).drop("__rn")
-        def onePart(df: org.apache.spark.sql.DataFrame, tmp: String): java.nio.file.Path = {
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val st = Files.list(Paths.get(tmp))
-          try st.filter(_.toString.endsWith(".parquet")).findFirst.get finally st.close()
-        }
-        val cut1 = n / 3
-        val cut2 = 2 * n / 3
-        val parts = Seq(
-          "00_t0.parquet" -> onePart(slice(0, cut1), s"$dir/_tmp_a"),
-          "01_t1.parquet" -> onePart(slice(cut1, cut2), s"$dir/_tmp_b"),
-          "02_t2.parquet" -> onePart(slice(cut2, n), s"$dir/_tmp_c"))
-        Files.createDirectories(Paths.get(dir))
-        val t0 = System.currentTimeMillis()
-        parts.zipWithIndex.foreach { case ((name, src), i) =>
-          Files.copy(src, Paths.get(s"$dir/$name"), StandardCopyOption.REPLACE_EXISTING)
-          new java.io.File(s"$dir/$name").setLastModified(t0 - 180000 + i * 60000)
-        }
-        one.unpersist()
-        Seq("_tmp_a", "_tmp_b", "_tmp_c").foreach(t =>
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$t")))
-        done.createNewFile()
-      }
-      dir
+    StagedTables.dir(s, "stream_events_ter3", d) { dir =>
+      // single-partition sort, THEN the id: on one partition
+      // monotonically_increasing_id is 0..n-1 in sort order (after a
+      // distributed orderBy the ids would be partition-offset encoded —
+      // monotone but not contiguous, breaking the n/3 cuts)
+      val one = Tables.events(s, d).coalesce(1)
+        .sortWithinPartitions("ts", "event_id")
+        .withColumn("__rn", monotonically_increasing_id())
+        .persist()
+      val n = one.count()
+      def slice(lo: Long, hi: Long) = one.filter(col("__rn") >= lo && col("__rn") < hi).drop("__rn")
+      val (cut1, cut2) = (n / 3, 2 * n / 3)
+      replayFiles(s, dir, Seq("00_t0.parquet" -> slice(0, cut1),
+        "01_t1.parquet" -> slice(cut1, cut2), "02_t2.parquet" -> slice(cut2, n)))
+      one.unpersist()
     }
 }

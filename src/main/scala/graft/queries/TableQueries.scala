@@ -5,7 +5,7 @@ import graft.sources.{SnapshotTable, Tables}
 
 /** SURVEY §2 group G16 — the snapshot-table (table-format) surface as
   * driver-gated queries: a fixed three-commit scenario over `orders`
-  * (create → merge → delete) staged once per JVM, then read back at
+  * (create → merge → delete) staged once per input, then read back at
   * different versions. The mutations are deterministic functions of the
   * base table, so every post-mutation state is reproducible as plain SQL
   * over `orders` — which is exactly what the oracles do. Aggregated
@@ -22,32 +22,40 @@ import graft.sources.{SnapshotTable, Tables}
   */
 object TableQueries {
 
-  /** Guards the check-then-build of every scenario dir: two concurrent
-    * callers racing latestVersion/delete/create would corrupt the staged
-    * table (the StreamingQueries staging-lock discipline). */
-  private val scenarioLock = new Object
-
-  /** Build the scenario table once per (input dir) per JVM — the staged
-    * idiom; SnapshotTable's own commit markers make the check cheap. */
-  private def scenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 2) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  /** Stage a scenario table once per input (a StagedTables directory):
+    * v0 is `orders` projected to (o_orderkey, o_orderstatus, price),
+    * written as `files` files; `steps` then commits the scenario's later
+    * versions over that base. */
+  private def scenario(s: org.apache.spark.sql.SparkSession, d: String, tag: String,
+                       files: Int = 4)
+                      (steps: (String, org.apache.spark.sql.DataFrame) => Unit): String =
+    StagedTables.dir(s, tag, d) { dir =>
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey")
-      val updates = base.filter(col("o_orderkey") % 7 === 3)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          (col("price") + 100.0).as("price"))
-      val inserts = base.filter(col("o_orderkey") % 101 === 5)
-        .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-          lit("N").as("o_orderstatus"), lit(50.0).as("price"))
-      SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
-      SnapshotTable.delete(s, dir, col("o_orderstatus") === "P", "o_orderkey")
+      SnapshotTable.create(s, dir, base, "o_orderkey", filesPerCommit = files)
+      steps(dir, base)
     }
-    dir
+
+  /** The G16 v1 merge and v2 delete, both restricted to `scope`: matched
+    * updates (price + 100.0 on `o_orderkey % 7 == 3`) plus inserts keyed
+    * o_orderkey + 100000000 for `o_orderkey % 101 == 5`, then status 'P'
+    * removed. */
+  private def mergeThenDelete(s: org.apache.spark.sql.SparkSession, dir: String,
+                              base: org.apache.spark.sql.DataFrame,
+                              scope: org.apache.spark.sql.Column = lit(true)): Unit = {
+    val updates = base.filter(col("o_orderkey") % 7 === 3 && scope)
+      .select(col("o_orderkey"), col("o_orderstatus"),
+        (col("price") + 100.0).as("price"))
+    val inserts = base.filter(col("o_orderkey") % 101 === 5)
+      .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
+        lit("N").as("o_orderstatus"), lit(50.0).as("price"))
+    SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
+    SnapshotTable.delete(s, dir, col("o_orderstatus") === "P" && scope, "o_orderkey")
   }
+
+  /** The G16 scenario: create → merge → delete. */
+  private def g16Scenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    scenario(s, d, "snaptable")(mergeThenDelete(s, _, _))
 
   /** The per-status state fingerprint both engines aggregate to. */
   private def stateAgg(df: org.apache.spark.sql.DataFrame) =
@@ -82,7 +90,7 @@ object TableQueries {
     // identical state through file-level copy-on-write.
     QueryDef.sql("q_table_merge",
       s"WITH $mergedCte\n${aggSql.format("v2")}") { (s, d) =>
-      stateAgg(SnapshotTable.read(s, scenario(s, d)))
+      stateAgg(SnapshotTable.read(s, g16Scenario(s, d)))
     },
 
     // G16b — time travel: after both mutations, a version-0 read must
@@ -90,7 +98,7 @@ object TableQueries {
     // contract; also the audit/rollback read path).
     QueryDef.sql("q_time_travel",
       s"WITH $mergedCte\n${aggSql.format("base")}") { (s, d) =>
-      stateAgg(SnapshotTable.read(s, scenario(s, d), version = 0))
+      stateAgg(SnapshotTable.read(s, g16Scenario(s, d), version = 0))
     },
 
     // G16c — the commit log: version → (op, row count). Row counts come
@@ -104,7 +112,7 @@ object TableQueries {
          |  UNION ALL SELECT 1, 'merge', (SELECT count(*) FROM v1)
          |  UNION ALL SELECT 2, 'delete', (SELECT count(*) FROM v2))
          |ORDER BY version""".stripMargin) { (s, d) =>
-      SnapshotTable.history(s, scenario(s, d))
+      SnapshotTable.history(s, g16Scenario(s, d))
         .select(col("version"), col("op"), col("n_rows"))
     },
 
@@ -230,89 +238,34 @@ object TableQueries {
     * while the other ~14 carry over by reference and are provably
     * feed-silent. The cut is `max(key) div 16`: exact integer division
     * in both engines, deterministic at every sf. */
-  private def cdfScenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_f_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 2) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey", filesPerCommit = 16)
+  private def cdfScenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    scenario(s, d, "snaptable_f", files = 16) { (dir, base) =>
       val cut = base.agg(max(col("o_orderkey")).cast("long")).head().getLong(0) / 16
-      val updates = base
-        .filter(col("o_orderkey") % 7 === 3 && col("o_orderkey") <= cut)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          (col("price") + 100.0).as("price"))
-      val inserts = base.filter(col("o_orderkey") % 101 === 5)
-        .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-          lit("N").as("o_orderstatus"), lit(50.0).as("price"))
-      SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
-      SnapshotTable.delete(s, dir,
-        col("o_orderstatus") === "P" && col("o_orderkey") <= cut, "o_orderkey")
+      mergeThenDelete(s, dir, base, col("o_orderkey") <= cut)
     }
-    dir
-  }
 
   /** The G18 scenario: create, then a schema-EVOLVING merge that adds a
     * discount column on the matched keys only. Own dir (two versions). */
-  private def evolveScenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_e_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 1) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey")
+  private def evolveScenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    scenario(s, d, "snaptable_e") { (dir, base) =>
       val updates = base.filter(col("o_orderkey") % 7 === 3)
         .withColumn("discount", lit(0.05))
       SnapshotTable.merge(s, dir, updates, "o_orderkey", evolve = true)
     }
-    dir
-  }
 
   /** The G17 scenario: the G16 three commits plus a compaction. Staged in
     * its OWN dir so the shared G16 history stays three versions. */
-  private def compactScenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_c_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 3) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey")
-      val updates = base.filter(col("o_orderkey") % 7 === 3)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          (col("price") + 100.0).as("price"))
-      val inserts = base.filter(col("o_orderkey") % 101 === 5)
-        .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-          lit("N").as("o_orderstatus"), lit(50.0).as("price"))
-      SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
-      SnapshotTable.delete(s, dir, col("o_orderstatus") === "P", "o_orderkey")
+  private def compactScenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    scenario(s, d, "snaptable_c") { (dir, base) =>
+      mergeThenDelete(s, dir, base)
       SnapshotTable.compact(s, dir, "o_orderkey", targetFiles = 2)
     }
-    dir
-  }
 
   /** G21 scenario: create → merge → delete (the "bad write") → RESTORE
     * back to the post-merge version. */
-  private def restoreScenario(s: org.apache.spark.sql.SparkSession, d: String): String = scenarioLock.synchronized {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_snaptable_r_" +
-      Integer.toHexString(d.hashCode)
-    if (SnapshotTable.latestVersion(dir) < 3) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-      val base = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderstatus"), col("o_totalprice").as("price"))
-      SnapshotTable.create(s, dir, base, "o_orderkey")
-      val updates = base.filter(col("o_orderkey") % 7 === 3)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          (col("price") + 100.0).as("price"))
-      val inserts = base.filter(col("o_orderkey") % 101 === 5)
-        .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
-          lit("N").as("o_orderstatus"), lit(50.0).as("price"))
-      SnapshotTable.merge(s, dir, updates.unionByName(inserts), "o_orderkey")
-      SnapshotTable.delete(s, dir, col("o_orderstatus") === "P", "o_orderkey")
+  private def restoreScenario(s: org.apache.spark.sql.SparkSession, d: String): String =
+    scenario(s, d, "snaptable_r") { (dir, base) =>
+      mergeThenDelete(s, dir, base)
       SnapshotTable.restore(s, dir, 1)
     }
-    dir
-  }
 }

@@ -94,6 +94,25 @@ class PropertySpec extends AnyFunSuite {
       }
     }
 
+    test(s"k-core peel with a precomputed deg0 == the deg0 = None peel (seed $seed)") {
+      val rnd = new Random(3500 + seed)
+      val n = 30
+      val edges = (0 until 70)
+        .map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        .filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+        .distinct.toDF("u", "v")
+      // the staged-codeg shape: one (node, degree) row per endpoint
+      val deg0 = edges.select(explode(array(col("u"), col("v"))).as("u"))
+        .groupBy("u").agg(count(lit(1)).as("dg"))
+      for (k <- Seq(2, 3, 4)) {
+        val plain = graft.operators.KCore.kcore(edges, k).as[(Long, Long)].collect().toMap
+        val given = graft.operators.KCore.kcore(edges, k, deg0 = Some(deg0))
+          .as[(Long, Long)].collect().toMap
+        assert(given == plain, s"k=$k")
+      }
+    }
+
     test(s"k-core peel throws on maxIter exhaustion instead of returning a superset (seed $seed)") {
       // a path graph peels one layer per round: 0-1-2-...-9 with k=2
       // strips both endpoints each round and needs ~5 rounds to empty —

@@ -65,6 +65,29 @@ class SimilaritySpec extends AnyFunSuite {
     assert(diffs == 0)
   }
 
+  test("L2SqF64 returns null for a null element, like its HOF twin, codegen and interpreted") {
+    val df = Seq(
+        (0, Seq(Some(1.0), None, Some(3.0)), Seq(Some(1.0), Some(2.0), Some(3.0))),
+        (1, Seq(Some(1.0), Some(2.0)), Seq(Some(0.0), None)),
+        (2, Seq(Some(1.0), Some(2.0)), Seq(Some(0.0), Some(4.0))))
+      .toDF("id", "a", "b").repartition(1) // no local-relation folding
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach { case (mode, wholeStage) =>
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        val got = df.select(col("id"),
+            VectorFunctions.l2sqFast(col("a"), col("b")),
+            VectorFunctions.l2sq(col("a"), col("b")))
+          .collect().sortBy(_.getInt(0))
+          .map(r => (Option(r.get(1)), Option(r.get(2)))).toSeq
+        assert(got == Seq((None, None), (None, None), (Some(5.0), Some(5.0))), s"mode=$mode")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+  }
+
   test("graft_cosine is registered for SQL via GraftExtensions") {
     val emb = Tables.embeddings(spark, TestSpark.sfDir)
     emb.createOrReplaceTempView("emb_sql_check")
